@@ -38,8 +38,8 @@ LANGS = ("en", "zh", "es", "fr", "de")
 LANG_P = (0.41, 0.15, 0.15, 0.15, 0.14)
 
 
-def events_table(seed: int, n: int = N_EVENTS) -> pa.Table:
-    rng = np.random.default_rng(seed)
+def events_table(seed: int) -> pa.Table:
+    rng, n = np.random.default_rng(seed), N_EVENTS
     ts = np.sort(rng.integers(0, SPAN_US, n)) + EPOCH_US
     k = rng.integers(0, 100, n)
     return pa.table({
@@ -52,8 +52,8 @@ def events_table(seed: int, n: int = N_EVENTS) -> pa.Table:
     })
 
 
-def documents_table(seed: int, n: int = N_DOCS) -> pa.Table:
-    rng = np.random.default_rng(seed + 1)
+def documents_table(seed: int) -> pa.Table:
+    rng, n = np.random.default_rng(seed + 1), N_DOCS
     vocab = np.array(VOCAB)
     texts = []
     for i in range(n):
@@ -74,8 +74,8 @@ def documents_table(seed: int, n: int = N_DOCS) -> pa.Table:
     })
 
 
-def embeddings_table(seed: int, n: int = N_VECS) -> pa.Table:
-    rng = np.random.default_rng(seed + 2)
+def embeddings_table(seed: int) -> pa.Table:
+    rng, n = np.random.default_rng(seed + 2), N_VECS
     x = rng.standard_normal((n, EMB_DIM)).astype(np.float32)
     x /= np.linalg.norm(x, axis=1, keepdims=True)
     return pa.table({

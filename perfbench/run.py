@@ -12,7 +12,8 @@ checks every pass's outputs, and prints a report followed by one JSON
 line: {"correct", "attempted", "failed", "metrics"}.
 
   * --trace 0 reports the end-to-end metrics (setup_s, wall_s,
-    events_per_s, microbatch_p50_ms, peak_rss_mb).
+    events_per_s, microbatch_p50_ms, peak_rss_mb), with start and end
+    loadavg and bench.py's host-speed probes beside them as context.
   * --trace 1 runs the same workload with a Spark event log and span
     tags on, reports the per-layer metrics, then repeats the timed
     section untraced in a fresh session to state the tracing overhead.
@@ -33,6 +34,8 @@ Session settings beyond session.get_spark's defaults:
   * spark.driver.memory = 2g, so peak_rss_mb does not scale with the
     host's RAM (the default heap is 60% of it), and a run stays small
     on a shared host.
+So a change to session.get_spark's partition or heap defaults does not
+show in any of this benchmark's metrics.
 """
 
 from __future__ import annotations
@@ -222,8 +225,12 @@ def run(ctx: Ctx, args) -> tuple[dict, list[str]]:
     if args.trace:
         lines[0] += " (traced: these figures include tracing overhead)"
     else:
+        # host speed next to each run's figures, not a metric: bench.py's
+        # fixed-size JVM and numpy probes, run after the timed section
+        import bench
+        probes = bench._calibration_probes(ctx.spark)
         lines.append(f"  context: loadavg start {load_start} "
-                     f"end {os.getloadavg()}")
+                     f"end {os.getloadavg()} probes_s {probes}")
         return _result(e2e, attempted, failed), lines
 
     context = {"self_s": ctx.tracer.self_times("pass"),

@@ -33,6 +33,7 @@ from pyspark.sql.streaming import StreamingQueryListener
 # query threads inherit it from the thread that starts them)
 SPAN_PROPERTY = "perfbench.span"
 RUN_ID_PROPERTY = "spark.jobGroup.id"   # streaming sets it to the run id
+RSS_PERIOD_S = 0.25
 
 
 def union_len(intervals) -> float:
@@ -208,10 +209,9 @@ def _tree_pss_kb(root: int) -> int:
 
 class RssSampler:
     """Peak of the summed resident memory (PSS) of this process tree,
-    sampled every `period` seconds between start() and stop()."""
+    sampled every RSS_PERIOD_S seconds between start() and stop()."""
 
-    def __init__(self, period: float = 0.25):
-        self.period = period
+    def __init__(self):
         self.peak_kb = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
@@ -219,7 +219,7 @@ class RssSampler:
     def _loop(self):
         while not self._stop.is_set():
             self.peak_kb = max(self.peak_kb, _tree_pss_kb(os.getpid()))
-            self._stop.wait(self.period)
+            self._stop.wait(RSS_PERIOD_S)
 
     def start(self):
         self._thread.start()

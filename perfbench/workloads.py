@@ -28,6 +28,7 @@ import shutil
 import time
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 import fixtures
@@ -40,6 +41,9 @@ WINDOW = "30 seconds"
 TRICKLE_CHUNKS = 8           # chunks per stream → 8 micro-batches/query
 TRICKLE_EVENTS = 300 * TRICKLE_CHUNKS
 BATCH_DROPS = 4
+# tweet texts planted into the trickle slice: scores 1, -1, -1/3, 1/3
+PLANTED = ("fast big", "slow small", "big slow slow", "fast big slow")
+PLANT_EVERY = 4
 
 
 def _files(root: str) -> list[str]:
@@ -122,17 +126,19 @@ class SpeedTrickle:
             0, fixtures.N_EVENTS - TRICKLE_EVENTS))
         with tr.span("fixtures.write"):
             sl = fixtures.events_table(c.seed).slice(first, TRICKLE_EVENTS)
+            # every PLANT_EVERY-th tweet text carries lexicon words, so
+            # the sentiment check sees non-zero scores
+            props = sl.column("props").to_pylist()
+            for i in range(0, len(props), PLANT_EVERY):
+                props[i] = PLANTED[i // PLANT_EVERY % len(PLANTED)]
+            sl = sl.set_column(sl.schema.get_field_index("props"), "props",
+                               pa.array(props))
             fixtures.write_table(sf, "events", sl)
-        # the model bundle the forecasts read: per-symbol lag-1
-        # autocorrelation of the slice's prices (the trainer itself is
-        # timed in batch_cycle)
-        bundle = {"version": BUNDLE_VERSION, "models": {}}
-        for sym, g in sl.to_pandas().groupby("event_type"):
-            x = g["value"].to_numpy()
-            bundle["models"][sym] = {
-                "phi": float(np.clip(np.corrcoef(x[:-1], x[1:])[0, 1],
-                                     -0.99, 0.99)),
-                "mu": float(x.mean())}
+        # a fixed model bundle, one phi per symbol (the trainer itself
+        # is timed in batch_cycle)
+        bundle = {"version": BUNDLE_VERSION,
+                  "models": {t: {"phi": 0.5 + 0.1 * i, "mu": 0.0}
+                             for i, t in enumerate(fixtures.EVENT_TYPES)}}
         self.bundle_path = os.path.join(c.work, "models", "ar1.json")
         with tr.span("model_registry.save_bundle"):
             save_bundle(bundle, self.bundle_path)
@@ -232,6 +238,8 @@ class SpeedTrickle:
 
         want = sorted((r.event_time, r.symbol, r.text, score(r.text))
                       for r in self.tweets.itertuples(index=False))
+        if not any(w[3] for w in want):
+            fails.append("no input tweet carries a lexicon word")
         if len(got) != len(want) or any(
                 g[:3] != w[:3] or not _close(g[3], w[3])
                 for g, w in zip(got, want)):
