@@ -8,7 +8,9 @@ Spark-first translation of the reference's moving parts:
     Streaming file source with `trigger(availableNow)` + checkpoint:
     each run drains exactly the files not seen by previous runs.
   * per-collection Mongo bulk writers (:262-291) → `bulk_jsonl`
-    foreachPartition sinks (and parquet for the joined metrics).
+    JSONL document files written by Spark's JVM JSON writer, one per
+    non-empty partition and prefixed with the micro-batch id (and
+    parquet for the joined metrics).
   * the windowed metrics (:201-238) → operators.windowed_join.
 
 Run: python -m big_data_crypto_sentiment_spark.jobs.batch_job \

@@ -3442,14 +3442,15 @@ def _jpeg_hierarchical_decode(payload: bytes, pos: int, dhp_body: bytes,
             if eh > 1 or ev > 1:
                 raise ValueError("JPEG EXP factors out of range")
             for cid in refs:
-                r = _jpeg_exp_double(refs[cid], eh, ev)
-                # attacker-controlled repeated EXP must not allocate
-                # past the decode cap (plus the one-sample odd-dim
-                # slack a legal pyramid can carry per axis)
-                if r.size > 4 * _MAX_PIXELS:
+                # attacker-controlled repeated EXP must be rejected
+                # before it allocates: a legal pyramid never expands a
+                # reference past the DHP dims plus the one-sample
+                # odd-dim slack per axis
+                h, w = refs[cid].shape
+                if (h << ev) > dhp["h"] + 1 or (w << eh) > dhp["w"] + 1:
                     raise ValueError(
                         "JPEG EXP expansion over the decode cap")
-                refs[cid] = r
+                refs[cid] = _jpeg_exp_double(refs[cid], eh, ev)
         elif marker in (0xC0, 0xC1, 0xC2, 0xC5, 0xC6):
             # SOF6 differential progressive joined the tested surface
             # in r15: its scans reuse the progressive machinery with

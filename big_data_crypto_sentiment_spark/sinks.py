@@ -4,10 +4,11 @@
     (`partitionBy(date[, symbol])` reproduces the reference's BQ
     day-partitioning + symbol clustering, terraform/storage.tf:81-88),
     which is what makes partition pruning work on the read side.
-  * `bulk_jsonl` — the MongoDB bulk writer analog
-    (terraform/scripts/batch_to_mongo.py:262-291): `foreachPartition`,
-    documents chunked CHUNK-at-a-time per partition exactly like the
-    reference's 1000-doc insert_many batches, no driver involvement.
+  * `write_jsonl` (alias `bulk_jsonl`) — the MongoDB bulk writer
+    analog (terraform/scripts/batch_to_mongo.py:262-291): one JSONL
+    document file per non-empty partition, written by Spark's JVM JSON
+    writer. Rows never cross into a Python worker, and no data goes
+    through the driver.
 
 Scale notes: both sinks write from executors; `write_warehouse` keeps
 Catalyst in charge of file sizing (coalesce only if the caller asks).
@@ -15,13 +16,16 @@ Catalyst in charge of file sizing (coalesce only if the caller asks).
 
 from __future__ import annotations
 
-import json
+import glob
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-CHUNK = 1000  # batch_to_mongo.py:268 insert_many batch size
+# documents carry naive UTC wall-clock timestamps (the session pins
+# UTC), always with the microsecond fraction
+JSONL_TIMESTAMP_FORMAT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 
 def write_warehouse(df: DataFrame, path: str,
@@ -69,44 +73,32 @@ def write_bucketed(df: DataFrame, table_name: str,
     w.saveAsTable(table_name)
 
 
-def bulk_jsonl(df: DataFrame, out_dir: str, chunk: int = CHUNK,
-               prefix: str = "") -> None:
-    """foreachPartition bulk writer: each partition writes its documents
-    in `chunk`-sized groups to one JSONL file (atomic rename). Callers
-    writing repeatedly into one dir pass a distinct `prefix` per run —
-    rewriting the SAME prefix is idempotent (replay-safe), a new prefix
-    appends."""
-    os.makedirs(out_dir, exist_ok=True)
-    cols = df.columns
+def write_jsonl(df: DataFrame, out_dir: str, prefix: str = "") -> None:
+    """Write `df` as `{prefix}part-NNNNN.jsonl` files in `out_dir`, one
+    per non-empty partition, with null fields kept as `null`.
 
-    def write_partition(idx: int, rows) -> None:
-        buf, n_chunks, opened = [], 0, None
-        final = os.path.join(out_dir, f"{prefix}part-{idx:05d}.jsonl")
-        tmp = final + ".tmp"
+    Spark writes into a `_`-prefixed temp dir inside `out_dir`; this
+    prefix's old part files are then deleted and the new ones renamed
+    into place. Rewriting the SAME prefix therefore replaces its files
+    (a replayed batch leaves no stale part behind), and a new prefix
+    adds files next to the others. Callers writing repeatedly into one
+    dir pass a distinct prefix per run."""
+    tmp = os.path.join(out_dir, f"_{prefix}tmp")
+    (df.write.mode("overwrite")
+       .option("ignoreNullFields", "false")
+       .option("timestampFormat", JSONL_TIMESTAMP_FORMAT)
+       .json(tmp))
+    for stale in glob.glob(os.path.join(
+            glob.escape(out_dir), f"{glob.escape(prefix)}part-*.jsonl")):
+        os.remove(stale)
+    parts = sorted(p for p in glob.glob(os.path.join(tmp, "part-*"))
+                   if os.path.getsize(p))
+    for i, part in enumerate(parts):
+        os.replace(part, os.path.join(out_dir, f"{prefix}part-{i:05d}.jsonl"))
+    shutil.rmtree(tmp)
 
-        def flush():
-            nonlocal opened, n_chunks
-            if not buf:
-                return
-            if opened is None:
-                opened = open(tmp, "w")
-            for r in buf:
-                opened.write(json.dumps(dict(zip(cols, r)), default=str))
-                opened.write("\n")
-            buf.clear()
-            n_chunks += 1
 
-        for r in rows:
-            buf.append(r)
-            if len(buf) >= chunk:
-                flush()
-        flush()
-        if opened is not None:
-            opened.close()
-            os.replace(tmp, final)
-
-    df.rdd.mapPartitionsWithIndex(
-        lambda i, it: iter([write_partition(i, it)])).count()
+bulk_jsonl = write_jsonl  # batch_to_mongo.py:262-291 bulk-writer analog
 
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # match maxPartitionBytes
@@ -126,8 +118,6 @@ def compact_parquet(spark, path: str,
     when the input files aren't. Writes to a sibling temp dir first and
     atomically swaps, so a reader never sees a half-compacted
     directory."""
-    import shutil
-
     total = sum(os.path.getsize(os.path.join(dp, f))
                 for dp, _, fs in os.walk(path) for f in fs
                 if f.endswith(".parquet"))

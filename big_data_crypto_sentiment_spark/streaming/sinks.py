@@ -5,26 +5,25 @@
     append with a checkpoint = exactly-once file capture.
   * `start_jsonl_sink` — the MongoDB document-sink analog
     (stream_join.py:155-203 per-doc; batch_to_mongo.py:262-291 bulk):
-    `foreachBatch` → `foreachPartition` bulk writer. Files are named
-    (batch_id, partition_id), so replayed batches overwrite rather than
-    duplicate — the idempotent upsert that turns the checkpoint's
-    at-least-once into effectively-once (T9), and strictly better than
-    the reference's swallow-errors insert_one.
+    `foreachBatch` → `sinks.write_jsonl`, Spark's JVM JSON writer.
+    Files carry a `batch{batch_id}-` prefix and a replayed batch
+    replaces exactly its own files, so replays never duplicate — the
+    idempotent upsert that turns the checkpoint's at-least-once into
+    effectively-once (T9), and strictly better than the reference's
+    swallow-errors insert_one.
   * Running both on one upstream DF is the reference's multi-sink
     fan-out (T8): independent queries, independent checkpoints.
 
-Scale notes: the bulk writer batches per partition (the reference's
-1000-doc insert_many chunking maps to partition granularity) and never
-routes data through the driver.
+Scale notes: both sinks write from executors, one file per non-empty
+partition, and never route data through the driver.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
+
+from ..sinks import write_jsonl
 
 
 def start_capture_sink(df: DataFrame, out_dir: str, checkpoint: str,
@@ -40,28 +39,11 @@ def start_capture_sink(df: DataFrame, out_dir: str, checkpoint: str,
 
 
 def jsonl_partition_sink(out_dir: str):
-    """foreachPartition-style bulk writer: one JSONL file per (batch,
-    partition), written atomically via rename — idempotent on replay."""
+    """foreachBatch writer: each micro-batch becomes
+    `batch{batch_id}-part-NNNNN.jsonl` files — idempotent on replay."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        os.makedirs(out_dir, exist_ok=True)
-        cols = batch_df.columns
-
-        def write_partition(idx_rows):
-            idx, rows = idx_rows
-            rows = list(rows)
-            if not rows:
-                return
-            final = os.path.join(out_dir, f"batch{batch_id}-p{idx}.jsonl")
-            tmp = final + ".tmp"
-            with open(tmp, "w") as f:
-                for r in rows:
-                    f.write(json.dumps(dict(zip(cols, r)), default=str))
-                    f.write("\n")
-            os.replace(tmp, final)
-
-        batch_df.rdd.mapPartitionsWithIndex(
-            lambda i, it: iter([write_partition((i, it))])).count()
+        write_jsonl(batch_df, out_dir, prefix=f"batch{batch_id}-")
 
     return write_batch
 
