@@ -2,7 +2,9 @@
 reborn): two input streams fan out to raw capture, per-record sentiment
 enrichment, per-symbol online forecasts, and the watermarked windowed
 join — five concurrent queries off shared upstreams, each with its own
-checkpoint (T8).
+checkpoint (T8). Every query runs in the JVM: sentiment is a Catalyst
+expression and the forecast a window pass per micro-batch, so no
+micro-batch hands rows to a Python worker.
 
 Run: python -m big_data_crypto_sentiment_spark.jobs.speed_layer \
        --tweets-dir <dir> --prices-dir <dir> --out-dir <root> \
@@ -16,11 +18,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-from ..model_registry import broadcast_bundle, load_bundle, phi_by_symbol
+from ..model_registry import load_bundle, phi_by_symbol
 from ..streaming.enrich import enrich_with_sentiment
 from ..streaming.replay import replay_dir
 from ..streaming.sinks import start_capture_sink, start_jsonl_sink
-from ..streaming.stateful import online_forecast
+from ..streaming.stateful import start_forecast_sink
 from ..streaming.windowed import streaming_prices_with_tweets
 
 
@@ -34,10 +36,7 @@ def start_speed_layer(spark: SparkSession, tweets_dir: str, prices_dir: str,
     tweets = replay_dir(spark, tweets_dir, t_schema)
     prices = replay_dir(spark, prices_dir, p_schema)
 
-    phis = None
-    if model_bundle:
-        phis = broadcast_bundle(spark,
-                                phi_by_symbol(load_bundle(model_bundle)))
+    phis = phi_by_symbol(load_bundle(model_bundle)) if model_bundle else None
 
     def ck(name):
         return os.path.join(out_dir, "_checkpoints", name)
@@ -53,9 +52,8 @@ def start_speed_layer(spark: SparkSession, tweets_dir: str, prices_dir: str,
                          os.path.join(out_dir, "tweet_sentiment"),
                          ck("tweet_sentiment")),
         # per-tick online forecast (T6/M2), phi from the trained bundle
-        start_jsonl_sink(online_forecast(prices, phi_map=phis),
-                         os.path.join(out_dir, "price_forecasts"),
-                         ck("price_forecasts")),
+        start_forecast_sink(prices, os.path.join(out_dir, "price_forecasts"),
+                            ck("price_forecasts"), phi_map=phis),
     ]
     # windowed join (J1 union form) — append on watermark expiry (T3)
     joined = streaming_prices_with_tweets(tweets, prices,

@@ -5,13 +5,15 @@ The reference ships a joblib dict {symbol: ARIMA} to GCS after training
 it at worker setup (dataflow/stream_join.py:355-368). Spark-first form:
 the trained bundle is plain data (per-symbol closed-form AR(1) params
 from ml.q_ml_ar1_train), persisted as JSON (stdlib — no pickle/joblib
-trust surface), and distributed to executors with `spark.broadcast` —
-the idiomatic replacement for per-worker lazy model loading.
+trust surface). The speed layer turns `phi_by_symbol(bundle)` into a
+literal map inside its forecast expression, so the parameters reach
+the executors with the plan — the replacement for per-worker lazy
+model loading.
 
-Scale notes: a broadcast of O(symbols) floats is trivially small; for
-real heavyweight models the same shape holds (broadcast the artifact
-path + lazy-load per executor), which is what `broadcast_bundle`
-documents by keeping the bundle a value, not a connection.
+Scale notes: O(symbols) floats in a plan are trivially small; a real
+heavyweight model would ship as a broadcast artifact loaded once per
+executor, the shape `streaming/enrich.py:enrich_with_model_score`
+takes.
 """
 
 from __future__ import annotations
@@ -52,12 +54,6 @@ def load_bundle(path: str) -> dict:
     if bundle.get("version") != BUNDLE_VERSION:
         raise ValueError(f"unsupported bundle version {bundle.get('version')}")
     return bundle
-
-
-def broadcast_bundle(spark: SparkSession, bundle: dict):
-    """Broadcast the bundle; executors read .value (stream_join.py's
-    per-worker model dict, minus the per-worker reload)."""
-    return spark.sparkContext.broadcast(bundle)
 
 
 def phi_by_symbol(bundle: dict, default: float = 0.8) -> dict[str, float]:

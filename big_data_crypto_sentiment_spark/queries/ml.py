@@ -1728,7 +1728,7 @@ def q_ml_ridge_perm_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- T7 model-inference graduation (VERDICT r13 #5): the
-#     predict_batch_udf stand-in (streaming/enrich.py:88-125) has
+#     predict_batch_udf stand-in (streaming/enrich.py:84-121) has
 #     deterministic seed-minted weights, so the whole forward pass can
 #     go under the driver hash via the integer-freeze recipe
 #     (embed_pca_frozen): weights quantize ONCE to 1e-4-unit integer

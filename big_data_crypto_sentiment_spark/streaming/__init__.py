@@ -1,9 +1,9 @@
 """Structured Streaming layer (SURVEY.md §2.9 T1-T9, J1 streaming form,
-M2/T6 stateful online forecast)."""
+M2/T6 per-symbol online forecast)."""
 
 from .replay import replay_dir, write_replay_chunks  # noqa: F401
 from .sinks import jsonl_partition_sink, start_capture_sink, start_jsonl_sink  # noqa: F401
-from .stateful import online_forecast  # noqa: F401
+from .stateful import start_forecast_sink  # noqa: F401
 from .windowed import (  # noqa: F401
     dedupe_stream,
     hopping_window_counts,

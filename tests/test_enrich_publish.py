@@ -154,3 +154,43 @@ def test_model_score_streaming_matches_batch(spark, tmp_path):
             for r in enrich_with_model_score(df, dim,
                                              weights=weights).collect()}
     assert got == want
+
+
+def _py_lexicon_score(t):
+    """The Python scorer the Catalyst expression replaces."""
+    from big_data_crypto_sentiment_spark.streaming.enrich import (
+        NEG_WORDS,
+        POS_WORDS,
+    )
+    if t is None or not t:
+        return None
+    words = t.lower().split()
+    p = sum(w in POS_WORDS for w in words)
+    n = sum(w in NEG_WORDS for w in words)
+    return (p - n) / max(p + n, 1)
+
+
+def test_lexicon_score_matches_python_split_on_hostile_text(spark):
+    """The native score equals the Python one over `t.lower().split()`
+    for every separator str.split() knows — Java's \\s alone misses
+    \\x1c-\\x1f, \\x85, \\xa0 and the Unicode spaces — and for
+    separator-like characters str.split() does NOT split on."""
+    import sys
+    py_spaces = [chr(c) for c in range(sys.maxunicode + 1)
+                 if chr(c).isspace()]
+    for c in ("\x1c", "\x1d", "\x1e", "\x1f", "\x85", "\xa0", "\u3000",
+              *map(chr, range(0x2000, 0x200b))):
+        assert c in py_spaces
+    not_spaces = ["\u180e", "\u200b", "\u2060", "\ufeff", "\x1b", "\x00"]
+    texts = [None, "", " ", "\t\n \r", "\x1c\x85\u3000",
+             "  Moon\tFAST\nsell  ", "\tUP down\n", "OUTAGE", "neutral",
+             "moon moon moon sell", "BUY\r\nsell\x0bslow\x0cup"]
+    texts += [f"moon{c}sell{c}{c}BUY" for c in py_spaces + not_spaces]
+    texts += [f"{c}fast{c}" for c in py_spaces + not_spaces]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    got = {r.id: r.sentiment_score
+           for r in enrich_with_sentiment(df).collect()}
+    want = {i: _py_lexicon_score(t) for i, t in enumerate(texts)}
+    assert {want[i] for i in want} >= {None, 0.0, 1.0, -1.0, 1 / 3}
+    bad = {texts[i]: (got[i], want[i]) for i in want if got[i] != want[i]}
+    assert not bad

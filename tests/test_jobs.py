@@ -48,7 +48,7 @@ def test_batch_job_incremental_two_runs(spark, tmp_path):
     assert "date" in joined.columns
 
 
-def test_speed_layer_five_sinks(spark, tmp_path):
+def _speed_inputs(spark, tmp_path):
     ev = table(spark, SF_DIR, "events")
     t_dir, p_dir = str(tmp_path / "t"), str(tmp_path / "p")
     (ev.filter(F.col("props").isNotNull())
@@ -61,6 +61,11 @@ def test_speed_layer_five_sinks(spark, tmp_path):
                F.col("event_type").alias("symbol"),
                F.col("value").alias("price"))
        .coalesce(1).write.parquet(p_dir))
+    return t_dir, p_dir
+
+
+def test_speed_layer_five_sinks(spark, tmp_path):
+    t_dir, p_dir = _speed_inputs(spark, tmp_path)
     out = str(tmp_path / "out")
     queries = start_speed_layer(spark, t_dir, p_dir, out,
                                 window="30 minutes")
@@ -82,6 +87,44 @@ def test_speed_layer_five_sinks(spark, tmp_path):
     # sentiment sink rows carry the enrichment column
     with open(glob.glob(f"{out}/tweet_sentiment/*.jsonl")[0]) as f:
         assert "sentiment_score" in json.loads(next(f))
+
+
+# physical operators that hand rows to a Python worker
+PYTHON_EVAL_NODES = ("ArrowEvalPython", "BatchEvalPython",
+                     "FlatMapGroupsInPandasWithState", "MapInPandas")
+
+
+def test_speed_layer_runs_no_python_worker(spark, tmp_path, monkeypatch):
+    """Every micro-batch of the five speed-layer queries — and the
+    forecast sink's per-batch frame, which runs inside foreachBatch —
+    executes without a Python-evaluation node."""
+    from big_data_crypto_sentiment_spark.sinks import write_jsonl
+    from big_data_crypto_sentiment_spark.streaming import stateful
+    t_dir, p_dir = _speed_inputs(spark, tmp_path)
+    written = []
+
+    def spy(df, *args, **kwargs):
+        write_jsonl(df, *args, **kwargs)
+        written.append(df)
+
+    monkeypatch.setattr(stateful, "write_jsonl", spy, raising=False)
+    queries = start_speed_layer(spark, t_dir, p_dir, str(tmp_path / "out"),
+                                window="30 minutes")
+    try:
+        for q in queries:
+            q.processAllAvailable()
+        plans = [q._jsq.explainInternal(False) for q in queries]
+    finally:
+        for q in queries:
+            q.stop()
+    assert all("== Physical Plan ==" in p for p in plans)
+    found = {node for p in plans for node in PYTHON_EVAL_NODES if node in p}
+    assert not found, found
+    assert written, "the forecast sink wrote no batch"
+    for df in written:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Window" in plan
+        assert not [node for node in PYTHON_EVAL_NODES if node in plan], plan
 
 
 def test_train_job_writes_bundle(spark, tmp_path, capsys):

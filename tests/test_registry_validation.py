@@ -1,4 +1,4 @@
-"""Model registry roundtrip + broadcast into the streaming forecast, and
+"""Model registry roundtrip + per-symbol phi into the streaming forecast, and
 magic-byte/gzip validation (bytes form + distributed binaryFile form)."""
 
 import gzip
@@ -6,7 +6,6 @@ import gzip
 import pytest
 
 from big_data_crypto_sentiment_spark.model_registry import (
-    broadcast_bundle,
     load_bundle,
     phi_by_symbol,
     save_bundle,
@@ -40,32 +39,43 @@ def test_bundle_version_gate(tmp_path):
 
 
 def test_broadcast_bundle_reaches_stateful_forecast(spark, tmp_path):
-    """S17 end to end: batch trainer → bundle → broadcast → per-symbol
-    phi consumed by the streaming stateful operator."""
-    import pandas as pd
+    """S17 end to end: bundle → per-symbol phi → the speed layer's
+    forecast sink; a symbol the bundle lacks uses the default phi."""
+    import glob
+    import json
+    from datetime import datetime
+
     from big_data_crypto_sentiment_spark.streaming.stateful import (
-        make_forecast_fn,
+        start_forecast_sink,
     )
 
     bundle = {"version": 1, "models": {"ETH": {"phi": 0.5, "mu": 0.0,
                                                "n_train": 10, "mae": 0.0,
                                                "mape": 0.0}}}
-    bc = broadcast_bundle(spark, phi_by_symbol(bundle))
-
-    class FakeState:
-        exists = False
-        def update(self, v): self.v = v
-
-    fn = make_forecast_fn(phi=0.9, phi_map=bc)
-    pdf = pd.DataFrame({"event_time": pd.date_range("2024-01-01", periods=2,
-                                                    freq="15s"),
-                        "price": [10.0, 20.0]})
-    (out,) = list(fn(("ETH",), iter([pdf]), FakeState()))
+    schema = "symbol string, event_time timestamp, price double"
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(sym, datetime(2024, 1, 1, 0, 0, s), p)
+         for sym in ("ETH", "SOL") for s, p in ((0, 10.0), (15, 20.0))],
+        schema).write.parquet(src)
+    out = str(tmp_path / "out")
+    q = start_forecast_sink(spark.readStream.schema(schema).parquet(src),
+                            out, str(tmp_path / "ck"), phi=0.9,
+                            phi_map=phi_by_symbol(bundle))
+    try:
+        assert q.awaitTermination(600)
+    finally:
+        q.stop()
+    last = {}
+    for p in sorted(glob.glob(f"{out}/*.jsonl")):
+        for line in open(p):
+            d = json.loads(line)
+            if d["price"] == 20.0:
+                last[d["symbol"]] = d["next_price_forecast"]
     # after 2 ticks: mean 15, last 20 → forecast = 15 + 0.5·(20−15) = 17.5
-    assert out["next_price_forecast"].iloc[-1] == pytest.approx(17.5)
+    assert last["ETH"] == pytest.approx(17.5)
     # unknown symbol falls back to the default phi
-    (out2,) = list(fn(("SOL",), iter([pdf.copy()]), FakeState()))
-    assert out2["next_price_forecast"].iloc[-1] == pytest.approx(15 + 0.9 * 5)
+    assert last["SOL"] == pytest.approx(15 + 0.9 * 5)
 
 
 def test_sniff_and_gzip_revalidation():

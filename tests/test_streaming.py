@@ -1,6 +1,6 @@
 """Streaming-layer tests: file replay → watermarked windowed join →
 parity with the batch flagship (the lambda-architecture invariant,
-SURVEY.md §5 step 3/5), stateful online forecast sequence parity,
+SURVEY.md §5 step 3/5), online forecast sequence parity,
 append-mode emission semantics, and the multi-sink fan-out."""
 
 import pandas as pd
@@ -15,10 +15,11 @@ from big_data_crypto_sentiment_spark.queries.flagship import (
     tweets_role,
 )
 from big_data_crypto_sentiment_spark.streaming import (
-    online_forecast,
     replay_dir,
     start_capture_sink,
+    start_forecast_sink,
     start_jsonl_sink,
+    streaming_prices_with_tweets,
     union_form_prices_with_tweets,
     write_replay_chunks,
 )
@@ -138,26 +139,27 @@ def test_append_mode_watermark_holds_back_open_windows(spark, replayed,
 
 def test_stateful_online_forecast_matches_sequential_reference(
         spark, replayed, tmp_path):
+    import glob
+    import json
     _, p_stream = replayed
-    prices = p_stream.select("symbol", "event_time",
-                             F.col("price").cast("double").alias("price"))
-    out = online_forecast(prices, phi=0.8)
-    q = (out.writeStream.format("memory").queryName("forecasts")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt3"))
-            .start())
+    out = str(tmp_path / "forecasts")
+    q = start_forecast_sink(p_stream, out, str(tmp_path / "ckpt3"), phi=0.8)
     try:
-        q.processAllAvailable()
-        got = (spark.table("forecasts").toPandas()
-               .sort_values(["symbol", "event_time"])
-               .reset_index(drop=True))
+        assert q.awaitTermination(600)
     finally:
         q.stop()
+    got = (pd.DataFrame([json.loads(line)
+                         for p in glob.glob(f"{out}/*.jsonl")
+                         for line in open(p)])
+           .assign(event_time=lambda d: pd.to_datetime(d["event_time"]))
+           .sort_values(["symbol", "event_time"])
+           .reset_index(drop=True))
     raw = (prices_role(spark, SF_DIR)
            .select("symbol", "event_time", "price").toPandas())
     want = (reference_forecast_series(raw, phi=0.8)
             .sort_values(["symbol", "event_time"]).reset_index(drop=True))
     assert len(got) == len(want)
+    assert (got["event_time"] == want["event_time"]).all()
     pd.testing.assert_series_equal(got["next_price_forecast"],
                                    want["next_price_forecast"],
                                    rtol=1e-12)
@@ -484,52 +486,49 @@ def test_stream_stream_full_outer_full_set_matches_duckdb_twin(
     pd.testing.assert_frame_equal(want, got)
 
 
-def test_stateful_forecast_under_rocksdb_state_store(
-        spark, tmp_path):
+def test_windowed_join_under_rocksdb_state_store(spark, tmp_path):
     """The 100-TB state-store configuration (SURVEY §6: RocksDB-backed
     state instead of the default in-heap HDFS-backed store — state
-    size stops being bounded by executor heap) produces bit-identical
-    forecasts. Runs in an isolated newSession so the provider conf
+    size stops being bounded by executor heap) gives the speed layer's
+    stateful query, the watermarked windowed join, the same rows as the
+    default provider. Runs in isolated newSessions so the provider conf
     doesn't leak into the other streaming tests."""
-    sess = spark.newSession()
-    sess.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    # re-derive the stream in the new session (plans are session-bound)
     import glob
-    raw = (prices_role(sess, SF_DIR)
-           .select("symbol", "event_time", "price"))
-    chunks = str(tmp_path / "prices_rocks")
-    schema = write_replay_chunks(raw, chunks, 4)
-    prices = (replay_dir(sess, chunks, schema)
-              .select("symbol", "event_time",
-                      F.col("price").cast("double").alias("price")))
-    out = online_forecast(prices, phi=0.8)
-    q = (out.writeStream.format("memory").queryName("forecasts_rocks")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_rocks"))
-            .start())
-    try:
-        q.processAllAvailable()
-        # the provider actually engaged: RocksDB working dirs exist
-        # under the checkpoint's state store tree
-        sst = glob.glob(str(tmp_path / "ckpt_rocks" / "state" / "**"),
-                        recursive=True)
-        assert any("rocksdb" in p.lower() or p.endswith(".sst")
-                   or p.endswith(".zip") for p in sst)
-        got = (sess.table("forecasts_rocks").toPandas()
-               .sort_values(["symbol", "event_time"])
-               .reset_index(drop=True))
-    finally:
-        q.stop()
-    want = (reference_forecast_series(
-                raw.toPandas(), phi=0.8)
-            .sort_values(["symbol", "event_time"]).reset_index(drop=True))
-    assert len(got) == len(want)
-    pd.testing.assert_series_equal(got["next_price_forecast"],
-                                   want["next_price_forecast"],
-                                   rtol=1e-12)
+    raw_t = tweets_role(spark, SF_DIR)
+    raw_p = prices_role(spark, SF_DIR)
+    t_dir, p_dir = str(tmp_path / "t"), str(tmp_path / "p")
+    t_schema = write_replay_chunks(raw_t, t_dir, 4)
+    p_schema = write_replay_chunks(raw_p, p_dir, 4)
+
+    def drain(provider, name):
+        sess = spark.newSession()
+        if provider:
+            sess.conf.set("spark.sql.streaming.stateStore.providerClass",
+                          provider)
+        # plans are session-bound: derive the streams in this session
+        out = streaming_prices_with_tweets(
+            replay_dir(sess, t_dir, t_schema),
+            replay_dir(sess, p_dir, p_schema), window_duration=WINDOW)
+        ck = str(tmp_path / f"ck_{name}")
+        q = (out.writeStream.format("memory").queryName(name)
+                .outputMode("append")
+                .option("checkpointLocation", ck).start())
+        try:
+            q.processAllAvailable()
+            return _canon(sess.table(name)), ck
+        finally:
+            q.stop()
+
+    want, _ = drain(None, "pwt_default")
+    got, ck = drain("org.apache.spark.sql.execution.streaming.state."
+                    "RocksDBStateStoreProvider", "pwt_rocks")
+    # the provider actually engaged: RocksDB files exist under the
+    # checkpoint's state store tree
+    sst = glob.glob(f"{ck}/state/**", recursive=True)
+    assert any("rocksdb" in p.lower() or p.endswith(".sst")
+               or p.endswith(".zip") for p in sst)
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(want, got)
 
 
 def test_transform_with_state_forecast_parity(spark, tmp_path):
